@@ -31,6 +31,7 @@ Spark-first shape:
 
 from __future__ import annotations
 
+import functools
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -250,6 +251,7 @@ def validate_batched(spark: SparkSession,
     )
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         cleanup_sheet,
+        sql_map_literal,
     )
     from nci_seronet_proc_data_validator_spark.submission import (
         SKIP_VALIDATION,
@@ -301,16 +303,10 @@ def validate_batched(spark: SparkSession,
                              f"{sorted(missing_pre)}")
         # cbc per row from the submission tag; unknown tags fail loud
         # (a pretagged frame with a sid outside `subs` would otherwise
-        # silently validate under no CBC). ONE SQL map literal — per-
-        # entry F.lit Columns cost a py4j round-trip each, 2N per burst
-        # (the r7 model-as-literal lesson, r14).
-        def _q(s: str) -> str:
-            return s.replace("\\", "\\\\").replace("'", "\\'")
-        cbc_map_sql = "map(" + ", ".join(
-            f"'{_q(sid)}', '{_q(c)}'"
-            for sid, c in sorted(cbc_by_sub.items())) + ")"
+        # silently validate under no CBC).
         cbc_expr = F.coalesce(
-            F.expr(cbc_map_sql)[F.col(SUB_COL)],
+            F.expr(sql_map_literal(spark, sorted(cbc_by_sub.items())))[
+                F.col(SUB_COL)],
             F.raise_error(F.concat(
                 F.lit("validate_batched: pretagged row with unknown "
                       "submission id "), F.col(SUB_COL))))
@@ -568,43 +564,45 @@ def validate_batched_results(
         spark, subs, pretagged=pretagged, pinned_out=pinned,
         clean_out=clean_tagged).localCheckpoint(eager=True)
 
-    # -- batched A4: ONE grouped anti-join job per ID family for the
-    # WHOLE batch, replacing up to two driver actions per submission.
-    # The per-submission tail was the last O(N)-actions stage of a
-    # completion burst (~2.5 s/submission marginal at a 96-submission
-    # burst — the compile itself is O(distinct schemas)); the grouped
-    # form is the same math keyed by the submission tag: anti-join ids
-    # against same-sheet ID findings on (sub, sheet, value), then
-    # count DISTINCT (sub, id) per sub. Runs before the unpersist below
-    # so it reads the still-cached parses.
+    # -- batched A4: ONE grouped anti-join query for BOTH ID families
+    # and the WHOLE batch, replacing up to two driver actions per
+    # submission. The per-submission tail was the last O(N)-actions
+    # stage of a completion burst (~2.5 s/submission marginal at a
+    # 96-submission burst — the compile itself is O(distinct schemas));
+    # the grouped form is the same math keyed by the submission tag and
+    # a literal family column: anti-join ids against same-sheet ID
+    # findings on (sub, family, sheet, value), then count DISTINCT
+    # (sub, id) per (sub, family). Runs before the unpersist below so
+    # it reads the still-cached parses.
     a4_counts: "dict[str, dict[str, int]]" = {}
     declared_of = {
         "Research_Participant_ID": "declared_participants",
         "Biospecimen_ID": "declared_biospecimens"}
+    ids = None
     for col_name, _label, _fname in A4_FAMILIES:
-        family = [(n, df) for n, df in sorted(clean_tagged.items())
-                  if col_name in df.columns]
-        if not family or not any(
-                kw.get(declared_of[col_name]) is not None
-                for kw in subs.values()):
+        if not any(kw.get(declared_of[col_name]) is not None
+                   for kw in subs.values()):
             continue
-        errs = (tagged.filter((F.col("Column_Name") == col_name)
-                              & (F.col("Row_Index") >= 0))
-                .select(SUB_COL,
-                        F.col("CSV_Sheet_Name").alias("__sheet"),
-                        F.col("Column_Value").alias(col_name)))
-        ids = None
-        for name, df in family:
-            leg = df.select(SUB_COL, F.lit(name).alias("__sheet"),
-                            col_name)
+        for name, df in sorted(clean_tagged.items()):
+            if col_name not in df.columns:
+                continue
+            a4_counts[col_name] = {}
+            leg = df.select(SUB_COL, F.lit(col_name).alias("__family"),
+                            F.lit(name).alias("__sheet"),
+                            F.col(col_name).alias("__id"))
             ids = leg if ids is None else ids.unionByName(leg)
-        passing = ids.join(errs, [SUB_COL, "__sheet", col_name],
+    if ids is not None:
+        errs = (tagged.filter(F.col("Column_Name").isin(list(a4_counts))
+                              & (F.col("Row_Index") >= 0))
+                .select(SUB_COL, F.col("Column_Name").alias("__family"),
+                        F.col("CSV_Sheet_Name").alias("__sheet"),
+                        F.col("Column_Value").alias("__id")))
+        passing = ids.join(errs, [SUB_COL, "__family", "__sheet", "__id"],
                            "left_anti")
-        a4_counts[col_name] = {
-            r[SUB_COL]: r["n"]
-            for r in (passing.select(SUB_COL, col_name).distinct()
-                      .groupBy(SUB_COL).agg(F.count("*").alias("n"))
-                      .collect())}
+        for r in (passing.select(SUB_COL, "__family", "__id").distinct()
+                  .groupBy(SUB_COL, "__family")
+                  .agg(F.count("*").alias("n")).collect()):
+            a4_counts[r["__family"]][r[SUB_COL]] = r["n"]
     for df in pinned:
         df.unpersist()
 
@@ -659,6 +657,9 @@ def validate_batched_results(
         # consumer (the completion watcher) sinks the COMBINED frame and
         # reads only column_finding_rows — eagerly building N filters,
         # unions and pivots was the tail pool's whole cost (r14).
+        # Memoized: the summary aggregates the same frame `.findings`
+        # returns instead of building a second copy.
+        @functools.cache
         def _findings(sid=sid):
             f = tagged.filter(F.col(SUB_COL) == sid).drop(SUB_COL)
             if sid in a4_rows:

@@ -321,20 +321,36 @@ def read_sheet_csv_tagged(spark: SparkSession,
     # The tag lookup is total by construction (the scan reads exactly
     # norm's keys); a NULL lookup would mean URI normalization broke —
     # fail loud (raise_error), never silently drop rows into no
-    # submission. Rendered as ONE SQL map literal: per-entry F.lit
-    # Columns cost a py4j round-trip each — ~2N round-trips per sheet
-    # at an N-submission burst (the r7 model-as-literal lesson, r14).
-    def _q(s: str) -> str:
-        return s.replace("\\", "\\\\").replace("'", "\\'")
-    map_sql = "map(" + ", ".join(
-        f"'{_q(p)}', '{_q(t)}'" for p, t in sorted(norm.items())) + ")"
+    # submission.
     tag = F.coalesce(
-        F.expr(map_sql)[F.col(file_col)],
+        F.expr(sql_map_literal(spark, sorted(norm.items())))[
+            F.col(file_col)],
         F.raise_error(F.concat(
             F.lit("read_sheet_csv_tagged: unmatched input file "),
             F.col(file_col))))
     return (indexed.withColumn(tag_col, tag)
             .select(*data_cols, ROW_INDEX_COL, tag_col))
+
+
+def sql_map_literal(spark: SparkSession, pairs) -> str:
+    """SQL text ``map('k1', 'v1', ...)`` for string ``(key, value)``
+    pairs, for ``F.expr``.
+
+    One parsed expression instead of per-entry ``F.lit`` Columns, which
+    cost a py4j round trip each: ~2N round trips per map at an
+    N-submission burst. Quotes and backslashes are escaped for Spark's
+    default string-literal parser. With
+    ``spark.sql.parser.escapedStringLiterals`` on, that parser keeps
+    backslashes verbatim and the escaped keys would never match, so the
+    setting is refused here."""
+    if spark.conf.get("spark.sql.parser.escapedStringLiterals",
+                      "false").lower() != "false":
+        raise ValueError("sql_map_literal needs "
+                         "spark.sql.parser.escapedStringLiterals=false")
+
+    def q(v: str) -> str:
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return "map(" + ", ".join(f"{q(k)}, {q(v)}" for k, v in pairs) + ")"
 
 
 def cleanup_columns(cols, drop: tuple = ()) -> list[str]:

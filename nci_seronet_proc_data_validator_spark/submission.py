@@ -248,7 +248,7 @@ class ValidationResult:
 
     def __init__(self, findings: "DataFrame | None" = None,
                  column_findings: "DataFrame | None" = None,
-                 summary: "DataFrame | None" = None,
+                 summary: "DataFrame | None" = None, *,
                  column_finding_rows: "list | None" = None,
                  cached: "DataFrame | None" = None,
                  findings_thunk=None, column_findings_thunk=None,

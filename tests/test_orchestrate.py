@@ -499,6 +499,24 @@ def test_batched_results_free_data_scale_caches(spark, tmp_path):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
 
 
+def test_batched_result_contract(spark, tmp_path):
+    """A batched result's summary aggregates the very frame ``findings``
+    returns (the findings thunk is memoized, not rebuilt), and the
+    ValidationResult parameters after ``summary`` are keyword-only, so
+    a legacy positional ``cached`` fails loudly."""
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        validate_batched_results)
+    from nci_seronet_proc_data_validator_spark.submission import (
+        ValidationResult)
+
+    subs = {f"sub{i}": _load(spark, tmp_path, i) for i in range(2)}
+    r = validate_batched_results(spark, subs)["sub0"]
+    assert r._findings_thunk() is r.findings  # noqa: SLF001
+    assert r.summary.count() > 0
+    with pytest.raises(TypeError):
+        ValidationResult(r.findings, None, None, None, r.findings)
+
+
 def test_validate_stream_multi_mixed_cbc(spark, tmp_path):
     """r12: the multi-submission watcher — ONE streaming query draining
     files from per-submission directories with MIXED labs (subA cbc 14,

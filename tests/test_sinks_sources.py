@@ -1198,6 +1198,45 @@ def test_read_sheet_csv_tagged_matches_per_file(spark, tmp_path):
                 spark.conf.set(k, v)
 
 
+def test_sql_map_literal_quotes_and_backslashes(spark, tmp_path):
+    """The shared ``map(...)`` SQL literal keeps quotes and backslashes
+    in keys and values, end to end through the tagged scan's path map;
+    it refuses a session whose parser keeps backslashes verbatim."""
+    from nci_seronet_proc_data_validator_spark.sources.readers import (
+        read_sheet_csv_tagged,
+        sql_map_literal,
+    )
+
+    pairs = [("/data/it's\\x/demographic.csv", "sub'\\1"),
+             ("plain", "v'\\")]
+    m = F.expr(sql_map_literal(spark, pairs))
+    got = spark.range(1).select(
+        *[m[F.lit(k)].alias(f"v{i}") for i, (k, _) in enumerate(pairs)])
+    assert list(got.first()) == [v for _k, v in pairs]
+
+    # A backslash in a file path is a Hadoop glob escape, so the scan
+    # itself cannot read such a path; the quote is what reaches the map.
+    d = tmp_path / "it's_dir"
+    d.mkdir()
+    (d / "demographic.csv").write_text(
+        "Research_Participant_ID,Age\n14_000001,30\n")
+    (tmp_path / "other.csv").write_text(
+        "Research_Participant_ID,Age\n14_000002,31\n")
+    tagged = read_sheet_csv_tagged(
+        spark, {"sub'\\1": str(d / "demographic.csv"),
+                "b": str(tmp_path / "other.csv")}, "__submission_id")
+    assert sorted((r["__submission_id"], r["Age"])
+                  for r in tagged.collect()) == [
+        ("b", "31"), ("sub'\\1", "30")]
+
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            sql_map_literal(spark, pairs)
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+
+
 def test_per_file_row_index_split_safe(spark, tmp_path):
     """r13 (ADVICE): with multiline=False the CSV source is SPLITTABLE —
     one file can span several FilePartitions. The per-file row_index

@@ -703,3 +703,119 @@ def test_cli_complete_warns_on_unknown_declared_sheet(spark, tmp_path,
     assert rw.main() == 0
     text = capsys.readouterr().out
     assert "WARNING: declared sheet(s) ['demografic.csv']" in text, text
+
+
+def test_cli_complete_prints_collected_column_findings(spark, tmp_path,
+                                                       monkeypatch, capsys):
+    """The CLI's fallback for results without ``column_finding_rows``
+    collects the column findings as 5-field Rows (the 4 finding columns
+    plus the submission tag). A Row is a tuple, so the printout must
+    unpack its first four fields, not the whole Row."""
+    import sys
+
+    import nci_seronet_proc_data_validator_spark.streaming as streaming
+
+    sys.path.insert(0, "tools")
+    try:
+        import run_watcher as rw
+    finally:
+        sys.path.pop(0)
+
+    real = streaming.validate_stream_submissions
+    seen: dict = {}
+
+    def rows_dropped(*args, complete_cb=None, **kw):
+        def cb(results, epoch_id):
+            for sub, res in results.items():
+                seen[sub] = list(res.column_finding_rows)
+                res.column_finding_rows = None
+            complete_cb(results, epoch_id)
+        return real(*args, complete_cb=cb, **kw)
+
+    monkeypatch.setattr(streaming, "validate_stream_submissions",
+                        rows_dropped)
+    root = tmp_path / "landing"
+    _write_submission(root, "subA", "LabX", 0)
+    monkeypatch.setattr(sys, "argv", [
+        "run_watcher.py", str(root), "--complete",
+        "--sheets", "submission.csv,demographic.csv,biospecimen.csv",
+        "--out", str(tmp_path / "out"),
+        "--checkpoint", str(tmp_path / "cp"), "--cbc", "LabX=14"])
+    assert rw.main() == 0
+    text = capsys.readouterr().out
+    assert "completed ['subA']" in text, text
+    want = seen["subA"]
+    assert want, "the planted sheets must produce column findings"
+    assert f"subA: {len(want)} header/column finding(s):" in text, text
+    for mt, sheet, col, msg in want[:50]:
+        assert f"  {mt} {sheet} {col}: {msg}" in text, text
+
+
+def _listing_jobs_since(spark, last_job: int) -> list[str]:
+    """Descriptions of Spark's distributed file-listing jobs submitted
+    after job ``last_job``, read from the status store (works with the
+    UI disabled)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    found = []
+    for i in range(jobs.size()):          # newest first
+        j = jobs.apply(i)
+        if j.jobId() <= last_job:
+            break
+        desc = j.description()
+        if desc.isDefined() and desc.get().startswith(
+                "Listing leaf files and directories"):
+            found.append(desc.get())
+    return found
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_tagged_read_lists_files_on_driver(spark, tmp_path):
+    """More root paths than Spark's default parallel-discovery threshold
+    (32) must still be listed on the driver: a listing job costs one
+    task per path and buys no I/O parallelism on a local session."""
+    from nci_seronet_proc_data_validator_spark.sources.readers import (
+        read_sheet_csv_tagged)
+
+    paths = {}
+    for i in range(40):
+        d = tmp_path / f"sub{i:02d}"
+        d.mkdir()
+        (d / "demographic.csv").write_text(
+            f"Research_Participant_ID,Age,Race\n14_{i:06d},30,White\n")
+        paths[f"sub{i:02d}"] = str(d / "demographic.csv")
+    last = _last_job_id(spark)
+    assert read_sheet_csv_tagged(
+        spark, paths, "__submission_id").count() == 40
+    assert _listing_jobs_since(spark, last) == []
+
+
+def test_burst_drain_lists_files_on_driver(spark, tmp_path):
+    """A drain of more submission directories than the threshold lists
+    its arrivals, its micro-batch files and its tagged sheet scans on
+    the driver: no file-listing job is submitted."""
+    root = tmp_path / "landing"
+    for i in range(36):
+        d = root / f"sub{i:02d}"
+        d.mkdir(parents=True)
+        (d / "demographic.csv").write_text(
+            f"Research_Participant_ID,Age,Race\n14_{i:06d},30,White\n")
+        (d / "submission.csv").write_text("key,LabX\np,1\nb,0\n")
+    declared = frozenset({"submission.csv", "demographic.csv"})
+    done: dict = {}
+    last = _last_job_id(spark)
+    q = validate_stream_submissions(
+        spark, str(root), str(tmp_path / "cp"), declared,
+        str(tmp_path / "out"), cbc_map=CBC_MAP,
+        bind_kwargs={"today": TODAY},
+        complete_cb=lambda res, e: done.update(res))
+    q.awaitTermination(600)
+    assert len(done) == 36
+    assert _listing_jobs_since(spark, last) == []

@@ -227,11 +227,10 @@ def _run_complete(args) -> int:
         for sub, sub_rows in sorted(by_sub.items()):
             print(f"{sub}: {len(sub_rows)} header/column finding(s):")
             for r in sub_rows[:50]:
-                # plain 4-tuples (column_finding_rows) or collected Rows
-                mt, sheet, col, msg = (
-                    r if isinstance(r, tuple)
-                    else (r["Message_Type"], r["CSV_Sheet_Name"],
-                          r["Column_Name"], r["Error_Message"]))
+                # plain 4-tuples (column_finding_rows) or collected
+                # 5-field Rows (a Row is a tuple too); the finding
+                # columns come first in both shapes
+                mt, sheet, col, msg = tuple(r)[:4]
                 print(f"  {mt} {sheet} {col}: {msg}")
 
     def on_failed(failures, epoch_id):
