@@ -3613,8 +3613,7 @@ def q_rulebook_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nci_seronet_proc_data_validator_spark.plans.sql_oracle import (
         rulebook_bound_sheets,
     )
-    import os as _os
-    spread = int(_os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spread = spark.sparkContext.defaultParallelism
     from nci_seronet_proc_data_validator_spark.operators.joins import (
         biospecimen_cross_findings,
         participant_cross_findings,

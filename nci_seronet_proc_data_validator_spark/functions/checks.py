@@ -19,8 +19,10 @@ all (a ~400-check bind is pure string work; Column trees materialize
 lazily, via ``F.expr``, only when a query compiles).
 
 ``CheckExpr.violation`` may also be a pyspark Column for caller-supplied
-custom rules; such checks have no SQL mirror (``sql`` is None) and the
-sheet compiler falls back to Column composition.
+custom rules; such checks have no SQL mirror (``sql`` is None), and only
+direct ``plans.rules.compile_sheet_findings`` callers accept them (it
+falls back to Column composition). The submission compiler
+(``orchestrate.validate_batched``) renders SQL text and rejects them.
 
 Message strings reproduce the reference **verbatim**, including its typos
 ("interger", "databse", "requred", double spaces) — they are observable

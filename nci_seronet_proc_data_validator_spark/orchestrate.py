@@ -163,7 +163,11 @@ def validate_batched(spark: SparkSession,
     submissions; past ~20 submissions, sharding a batched run across
     driver PROCESSES adds another ~1.4x (GIL escape, BENCH_NOTES r12).
 
-    v2 scope/constraints (ValueError otherwise):
+    This is the ONE submission compiler: ``SubmissionValidator.validate``
+    is a batch of one, so a single submission and a burst compile
+    through the same code path.
+
+    Scope/constraints (ValueError otherwise):
     - every submission shares ``today`` and ``fix_reference_bugs`` (the
       rulebook binding is per those values); ``cbc_id`` MAY differ per
       submission (the production shape — the reference resolves the CBC
@@ -175,13 +179,22 @@ def validate_batched(spark: SparkSession,
       cross-sheet family gates and the enrichment-parent availability
       are computed over the batch union, so a submission missing a
       family sheet the others have would silently receive spine
-      findings / NULL-joined dependency columns that serial validate()
+      findings / NULL-joined dependency columns that its batch of one
       would never produce;
     - same-named sheets share an identical column set (one schema → one
       compiled rule set);
+    - ``db_merged_tables`` (the S5 JDBC fallback parents,
+      File_Submission_Object.py:501-527) may differ per submission in
+      content but every submission names the SAME fallback sheet set
+      and same-named fallbacks share a column set; each submission's
+      fallback frames are tagged like its sheets and used only for
+      sheets the batch did not submit. A fallback frame may live in
+      another SparkSession (the streaming clone case) — its views then
+      register as global temp views;
     - every bound check must render as SQL text (always true for the
-      built-in rulebook; a Column-valued custom rule has no text form
-      and only the serial path's DataFrame fallback can evaluate it);
+      built-in rulebook; a Column-valued custom rule has no text form —
+      only direct ``plans.rules.compile_sheet_findings`` callers can
+      evaluate it);
     - ``icd10_codes`` may be passed in any submission's kwargs; the
       first non-None wins (it is a shared dictionary by nature).
     Count reconciliation (A4), the quality gate, and the per-submission
@@ -247,7 +260,7 @@ def validate_batched(spark: SparkSession,
     )
     from nci_seronet_proc_data_validator_spark.plans.rules import (
         dup_id_findings_sql,
-        sheet_findings_sql,
+        sheet_findings_sql_cached,
     )
     from nci_seronet_proc_data_validator_spark.sources.readers import (
         cleanup_sheet,
@@ -277,21 +290,35 @@ def validate_batched(spark: SparkSession,
             "parents are computed over the batch union); got "
             f"{sorted({tuple(sorted(s)) for s in sheet_sets.values()})}"
             " — group submissions by sheet set, one batch each")
-    with_db = sorted(sid for sid, kw in subs.items()
-                     if kw.get("db_merged_tables"))
-    if with_db:
+    db_sets = {frozenset(kw.get("db_merged_tables") or ())
+               for kw in subs.values()}
+    if len(db_sets) > 1:
         raise ValueError(
-            f"batched mode does not support db_merged_tables (the JDBC "
-            f"fallback parents are per-submission side inputs the "
-            f"tagged-union enrichment cannot express); submissions "
-            f"{with_db} pass one — validate them serially or via "
-            f"validate_concurrent")
+            "batched mode needs an identical db_merged_tables sheet-name "
+            "set per submission (the fallback parents feed the same "
+            "batch-wide enrichment and cross-sheet gates); got "
+            f"{sorted(tuple(sorted(s)) for s in db_sets)} — group "
+            "submissions by fallback set, one batch each")
     cbc_by_sub = {sid: str(kw.get("cbc_id", "0"))
                   for sid, kw in subs.items()}
     cbc = PerRowCbc(column=CBC_COL,
                     values=tuple(sorted(set(cbc_by_sub.values()))))
     icd10 = next((kw["icd10_codes"] for kw in subs.values()
                   if kw.get("icd10_codes") is not None), None)
+
+    def tag_union(name: str, legs: list) -> "DataFrame":
+        cols = {tuple(sorted(leg.columns)) for leg in legs}
+        if len(cols) > 1:
+            raise ValueError(
+                f"batched mode needs one schema per sheet name; "
+                f"{name} has {len(cols)} distinct column sets")
+        u = legs[0]
+        for leg in legs[1:]:
+            u = u.unionByName(leg)
+        return u
+
+    def tags(sid: str) -> dict:
+        return {SUB_COL: F.lit(sid), CBC_COL: F.lit(cbc_by_sub[sid])}
 
     clean: dict[str, "DataFrame"] = {}
     if pretagged is not None:
@@ -327,17 +354,9 @@ def validate_batched(spark: SparkSession,
                 if name in SKIP_VALIDATION:
                     continue
                 by_sheet.setdefault(name, []).append(
-                    df.withColumns({SUB_COL: F.lit(sid),
-                                    CBC_COL: F.lit(cbc_by_sub[sid])}))
+                    df.withColumns(tags(sid)))
         for name, legs in by_sheet.items():
-            cols = {tuple(sorted(leg.columns)) for leg in legs}
-            if len(cols) > 1:
-                raise ValueError(
-                    f"batched mode needs one schema per sheet name; "
-                    f"{name} has {len(cols)} distinct column sets")
-            u = legs[0]
-            for leg in legs[1:]:
-                u = u.unionByName(leg)
+            u = tag_union(name, legs)
             # Persist: the union is a MULTI-consumer base (findings
             # chunks, dup-ID leg, Merged_Table projections, submitted-id
             # views) — unpersisted, every consumer re-parses N
@@ -361,18 +380,49 @@ def validate_batched(spark: SparkSession,
         mc = [c for c in MERGE_COLS.get(name, []) if c in df.columns]
         if mc:
             merged[name] = df.select(SUB_COL, CBC_COL, *mc)
+    # DB fallback parents for sheets the batch did not submit, tagged per
+    # submission so enrichment and the spines key them like sheet rows
+    fallback: dict[str, list] = {}
+    for sid, kw in subs.items():
+        for name, df in (kw.get("db_merged_tables") or {}).items():
+            if name not in merged:
+                fallback.setdefault(name, []).append(
+                    df.withColumns(tags(sid)))
+    for name, legs in fallback.items():
+        merged[name] = tag_union(name, legs)
 
     run_id = _uuid.uuid4().hex[:8]
     sql_legs: list[str] = []
-    view_names: list[str] = []
+    registered: list[tuple[bool, str]] = []
 
     def reg(df, tag: str) -> str:
         v = f"__batched_{run_id}_{tag}"
-        df.createOrReplaceTempView(v)
-        view_names.append(v)
-        return v
+        # A temp view registers in the DATAFRAME's session, but the SQL
+        # below runs on ``spark`` — a db_merged_tables fallback created
+        # on a DIFFERENT session (foreachBatch hands the compiler the
+        # streaming CLONE session while the fallback lives on the
+        # original) would land in a catalog spark.sql never consults
+        # (TABLE_OR_VIEW_NOT_FOUND). Global temp views are the public
+        # cross-session mechanism; use one exactly when sessions differ.
+        try:
+            same = df.sparkSession._jsparkSession.equals(
+                spark._jsparkSession)
+        except AttributeError:   # e.g. connect-mode wrappers
+            same = df.sparkSession is spark
+        if same:
+            df.createOrReplaceTempView(v)
+            registered.append((False, v))
+            return v
+        df.createOrReplaceGlobalTempView(v)
+        registered.append((True, v))
+        return f"global_temp.{v}"
 
-    defaults = {           # _ensure_columns twin (submission.py)
+    # Dependency columns referenced by rules but absent (e.g. the SARS
+    # column when prior_clinical_test was neither submitted nor given a
+    # DB fallback). Sentinels: '' disables dependency-scoped rules; NULL
+    # makes assay resolution (C9) flag everything as unresolved — "not
+    # found in database or submitted file" is then literally true.
+    defaults = {
         "SARS_CoV_2_PCR_Test_Result": F.lit(""),
         "Biospecimen_Type": F.lit(""),
         "Assay_Name": F.lit(None).cast("string"),
@@ -394,9 +444,8 @@ def validate_batched(spark: SparkSession,
             raise ValueError(
                 f"batched mode compiles findings as SQL text; sheet "
                 f"{name} bound a Column-valued check (custom caller "
-                f"rule) that has no text form — validate it serially "
-                f"(SubmissionValidator falls back to the DataFrame "
-                f"compile for such sheets)")
+                f"rule) that has no text form — evaluate it with "
+                f"plans.rules.compile_sheet_findings")
         missing = {c: v for c, v in defaults.items()
                    if c not in enriched.columns}
         if missing:
@@ -413,9 +462,9 @@ def validate_batched(spark: SparkSession,
         # exceeds HotSpot's JIT size ceiling and runs interpreted (the
         # rulebook's measured lesson, plans/rules.py) — at 8x-unioned
         # batched volume that is the dominant cost, not a nicety.
-        sql_legs.extend(sheet_findings_sql(view, name, bound.column_rules,
-                                           codegen_chunk=9,
-                                           carry_cols=(SUB_COL,)))
+        # memoized render: repeated schemas pay one str.replace per leg
+        sql_legs.extend(sheet_findings_sql_cached(
+            view, name, bound, codegen_chunk=9, carry_cols=(SUB_COL,)))
         if bound.dup_id_columns:
             dview = reg(df, f"d{i}")
             sql_legs.extend(
@@ -463,8 +512,11 @@ def validate_batched(spark: SparkSession,
         out = empty_findings(spark).withColumn(SUB_COL, F.lit(""))
         return out.select(SUB_COL, *FINDING_COLUMNS)
     findings = spark.sql(" UNION ALL ".join(sql_legs))
-    for v in view_names:       # resolved eagerly by spark.sql above
-        spark.catalog.dropTempView(v)
+    for is_global, v in registered:  # resolved eagerly by spark.sql above
+        if is_global:
+            spark.catalog.dropGlobalTempView(v)
+        else:
+            spark.catalog.dropTempView(v)
     # per-submission dedup: the standard key, tag prepended
     return findings.dropDuplicates(
         [SUB_COL, "CSV_Sheet_Name", "Row_Index", "Column_Name",
@@ -496,14 +548,11 @@ def validate_batched_results(
     logic: dict lookups, P10 header set algebra, and lazy summary plan
     construction — no actions.
 
-    Sheets register into the participant/biospecimen reconciliation
-    exactly as in serial ``validate()``: the ID column is present in
-    the sheet's own (pre-enrichment) columns — the bound flag reduces
-    to column membership because enrichment-added columns are disjoint
-    from the sheet's own by construction (``merge_tables`` only adds
-    absent columns), and sheet schemas are batch-uniform (the
-    validate_batched constraint), so the batch-wide family equals every
-    submission's own family.
+    A sheet registers into the participant/biospecimen reconciliation
+    when the ID column is present in its own (pre-enrichment) columns
+    (enrichment only adds absent columns, ``merge_tables``), and sheet
+    schemas are batch-uniform (the validate_batched constraint), so the
+    batch-wide family equals every submission's own family.
 
     ``pretagged`` callers note: unlike :func:`validate_batched`, this
     entry point DEREFERENCES ``subs[sid]["sheets"]`` values — the tail

@@ -212,29 +212,30 @@ _VIEW_SLOT = "\x00VIEW\x00"
 
 def sheet_findings_sql_cached(view: str, sheet_name: str, bound,
                               row_index_col: str = ROW_INDEX_COL,
-                              codegen_chunk: int | None = None
+                              codegen_chunk: int | None = None,
+                              carry_cols: tuple[str, ...] = ()
                               ) -> list[str]:
     """Memoized :func:`sheet_findings_sql` over a ``BoundSheet``.
 
     The ~459-check text render is pure CPU, identical for every
-    submission sharing a sheet schema, and sits on the serial
-    driver-build path that Amdahl-bounds concurrent orchestration
-    (BENCH_NOTES r10). The rendered statements (with a NUL view slot)
-    are cached ON the ``BoundSheet`` instance — which
-    ``bind_sheet_rules_cached`` shares across submissions — so
-    submission 2..N pay one ``str.replace`` per statement instead of
-    the full render. Only the view name varies per submission; sheet
-    name, rules, and row-index column are part of the instance + key.
+    compile sharing a sheet schema, and sits on the driver-build path
+    that Amdahl-bounds concurrent orchestration (BENCH_NOTES r10). The
+    rendered statements (with a NUL view slot) are cached ON the
+    ``BoundSheet`` instance — which ``bind_sheet_rules_cached`` shares
+    across compiles — so compiles 2..N pay one ``str.replace`` per
+    statement instead of the full render. Only the view name varies per
+    compile; sheet name, rules, row-index column, chunking and carried
+    columns are part of the instance + key.
     """
     cache = getattr(bound, "_sql_cache", None)
     if cache is None:
         cache = bound._sql_cache = {}
-    key = (sheet_name, row_index_col, codegen_chunk)
+    key = (sheet_name, row_index_col, codegen_chunk, tuple(carry_cols))
     tpl = cache.get(key)
     if tpl is None:
         tpl = cache[key] = sheet_findings_sql(
             _VIEW_SLOT, sheet_name, bound.column_rules,
-            row_index_col, codegen_chunk)
+            row_index_col, codegen_chunk, carry_cols)
     return [t.replace(_VIEW_SLOT, view) for t in tpl]
 
 

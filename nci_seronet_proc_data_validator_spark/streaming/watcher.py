@@ -326,8 +326,7 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                                 max_files_per_trigger: int | None = None,
                                 status_cb=None,
                                 complete_cb=None,
-                                failed_cb=None,
-                                batch_threshold: int = 2
+                                failed_cb=None
                                 ) -> "StreamingQuery":
     """Submission-COMPLETENESS-gated watcher: continuous operation with
     the reference's FULL per-submission semantics — per-sheet rules,
@@ -350,11 +349,12 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
       (``<output>/arrivals``, same dynamic-partition-overwrite
       idempotence as the findings sink);
     - a submission whose cumulative arrivals first cover
-      ``declared_sheets`` IN THIS BATCH is validated through the batch
-      compiler (``SubmissionValidator.validate`` over per-file
-      ``read_sheet_csv`` reads — byte-identical row identity and
-      findings to the batch CLI), and its full findings land in the
-      epoch-keyed findings sink (``<output>/findings``) tagged
+      ``declared_sheets`` IN THIS BATCH is validated through the one
+      submission compiler (``orchestrate.validate_batched_results``,
+      which ``SubmissionValidator.validate`` also calls, over per-file
+      row indexes — byte-identical row identity and findings to the
+      batch CLI), and its full findings land in the epoch-keyed
+      findings sink (``<output>/findings``) tagged
       ``__submission_id``.
 
     Why findings emit at COMPLETION rather than per sheet at arrival:
@@ -397,15 +397,15 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
     - ``status_cb(findings_df_or_None, epoch_id)``: fires every batch;
       ``None`` when no submission completed (arrival-only batch).
     - ``complete_cb({submission_id: ValidationResult}, epoch_id)``:
-      fires only on batches where submissions completed successfully,
-      BEFORE their findings caches are released — the hook for the
-      quality gate / notification / jobs-table bookkeeping, with the
-      full result (``column_findings`` included — the P10 header
-      findings are NOT part of the findings sink, same as the batch
-      CLI where they feed the quality gate, so ``expected_columns`` is
-      observable only here). Completion reporting must come from this
-      callback, not from counting findings rows: a fully CLEAN
-      submission completes with an empty findings frame.
+      fires only on batches where submissions completed successfully —
+      the hook for the quality gate / notification / jobs-table
+      bookkeeping, with the full result (``column_findings`` included
+      — the P10 header findings are NOT part of the findings sink,
+      same as the batch CLI where they feed the quality gate, so
+      ``expected_columns`` is observable only here). Completion
+      reporting must come from this callback, not from counting
+      findings rows: a fully CLEAN submission completes with an empty
+      findings frame.
     - ``failed_cb({submission_id: "ExcType: message"}, epoch_id)``:
       fires when a completing submission's VALIDATION ITSELF failed.
 
@@ -415,32 +415,29 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
     the rulebook cannot render, malformed metadata — must not fail the
     micro-batch, because a failed batch replays the same input and
     fails identically forever, wedging every LATER submission behind
-    it. Each per-submission compile is isolated; a failure is recorded
+    it. Each group compile is isolated; a failure is recorded
     DURABLY as one findings row (``CSV_Sheet_Name='__submission__'``,
     ``Row_Index=ROW_VALIDATION_FAILURE``,
     ``Column_Name='__validation_failure__'``, the exception in
     ``Error_Message``) in the same epoch-keyed sink, and reported via
-    ``failed_cb``. A batched group that fails falls back to
-    per-submission compiles first, so only the genuinely poisoned
-    member is recorded as failed. Replay semantics: if the epoch
-    crashes before its checkpoint commit, the replay RETRIES the
-    compile (a transient failure heals; a deterministic one re-records
-    the identical row); after the commit the submission counts as
-    handled — re-land it under a new submission directory to
-    revalidate, exactly like re-submitting to the reference pipeline.
+    ``failed_cb``. A group that fails retries its members as groups of
+    one first, so only the genuinely poisoned member is recorded as
+    failed. Replay semantics: if the epoch crashes before its
+    checkpoint commit, the replay RETRIES the compile (a transient
+    failure heals; a deterministic one re-records the identical row);
+    after the commit the submission counts as handled — re-land it
+    under a new submission directory to revalidate, exactly like
+    re-submitting to the reference pipeline.
 
     100 TB posture: per-batch driver work is O(files in batch) ledger
-    rows plus compiles for the NEWLY COMPLETE submissions — and when
-    ``batch_threshold`` or more of them share a schema (order-sensitive
-    header signature, probed driver-side), the whole group goes through
-    ONE compiled plan with ONE multi-file scan per sheet
-    (``orchestrate.validate_batched_results`` + pretagged
-    ``read_sheet_csv_tagged`` — the CLI --batched machinery, findings
-    byte-identical to per-submission compiles by its pinned contract),
+    rows plus compiles for the NEWLY COMPLETE submissions, grouped by
+    schema (order-sensitive header signature, probed driver-side). Each
+    group, a group of one included, goes through ONE compiled plan with
+    ONE multi-file scan per sheet (``orchestrate.validate_batched_results``
+    + pretagged ``read_sheet_csv_tagged`` — the CLI --batched machinery),
     so a burst of thousands of same-shape submissions completing in one
-    epoch costs O(distinct schemas) driver builds, not O(N). Submissions
-    whose schema group is smaller than the threshold (or whose headers
-    the probe refuses) compile per submission on a bounded thread pool.
+    epoch costs O(distinct schemas) driver builds, not O(N). Distinct
+    groups compile on a bounded thread pool.
     Arrival state is driver-resident and incremental: the full ledger
     (one metadata row per file ever arrived) is read ONCE per query run,
     then each batch adds only its own rows — a resident watcher's
@@ -536,19 +533,20 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
         if complete_now:
             from concurrent.futures import ThreadPoolExecutor
 
+            from nci_seronet_proc_data_validator_spark.orchestrate import (
+                SUB_COL,
+                validate_batched_results,
+            )
             from nci_seronet_proc_data_validator_spark.sources.readers \
-                import csv_header, read_sheet_csv
+                import csv_header, read_sheet_csv, read_sheet_csv_tagged
             from nci_seronet_proc_data_validator_spark.submission import (
-                SubmissionValidator,
+                SKIP_VALIDATION,
                 parse_submission_metadata,
                 parse_submission_metadata_local,
             )
             cbc = {str(k): str(v)
                    for k, v in (_resolve(cbc_map) or {}).items()}
             icd = _resolve(icd10_codes)
-
-            from nci_seronet_proc_data_validator_spark.submission \
-                import SKIP_VALIDATION
 
             # headers probed driver-side ONCE per file (the grouping
             # signature and the explicit-schema reads below share this
@@ -558,25 +556,21 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                          for sub in complete_now
                          for pth in have[sub].values()}
 
-            def _kwargs_for(sub: str, frames: bool = True) -> dict:
-                # probed header -> explicit schema -> the reads cost no
-                # Spark jobs (csv_header contract); metadata parsed
-                # driver-side too (parse_submission_metadata_local) —
-                # the DataFrame parse is one small Spark job per
-                # submission, a real slice of a 96-submission burst.
-                # frames=False (the batched-group path): sheet values
-                # are the probed COLUMN LISTS — the batched tail only
-                # ever reads names (P10), so a burst pays zero
-                # per-submission DataFrame construction (measured
-                # 26 s of py4j plan building at a 96-submission burst).
+            def _kwargs_for(sub: str) -> dict:
+                # Sheet values are the probed COLUMN LISTS: the compile
+                # reads rows through the pretagged scans below and the
+                # tail only ever reads names (P10), so a burst pays zero
+                # per-submission DataFrame construction (measured 26 s
+                # of py4j plan building at a 96-submission burst). A
+                # probe-refused header reads through Spark instead.
+                # Metadata is parsed driver-side too
+                # (parse_submission_metadata_local) — the DataFrame
+                # parse is one small Spark job per submission.
                 sheets = {}
                 for name, pth in sorted(have[sub].items()):
                     cols = hdr_cache[pth]
-                    if frames or cols is None:
-                        sheets[name] = read_sheet_csv(sess, pth,
-                                                      columns=cols)
-                    else:
-                        sheets[name] = list(cols)
+                    sheets[name] = (list(cols) if cols is not None
+                                    else read_sheet_csv(sess, pth))
                 if "submission.csv" in sheets:
                     meta = parse_submission_metadata_local(
                         have[sub]["submission.csv"], cbc)
@@ -585,8 +579,7 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                         if isinstance(sub_df, list):
                             sub_df = read_sheet_csv(
                                 sess, have[sub]["submission.csv"],
-                                columns=hdr_cache[
-                                    have[sub]["submission.csv"]])
+                                columns=sub_df)
                         meta = parse_submission_metadata(sub_df, cbc)
                 else:
                     meta = {"cbc_id": "0",
@@ -602,61 +595,16 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
 
             failures: dict[str, str] = {}
 
-            def _compile_one(sub: str):
-                # Per-submission error isolation — the reference's
-                # "Moving onto Next Submitted File" loop
-                # (nci-seronet-data-validator.py:70,109-111). Without
-                # it one poisoned submission (unreadable sheet, column
-                # name the rulebook cannot render, ...) fails the
-                # micro-batch, which replays and fails identically
-                # forever — a permanent wedge blocking every LATER
-                # submission. Record the failure (durably, as one
-                # finding row below) and move on.
+            def _compile(members: list) -> tuple[dict, list]:
+                """One schema group through the one submission compiler:
+                ONE plan, ONE multi-file scan per sheet. Returns the
+                members' results and the group's combined findings
+                frame (sink the WHOLE batch frame, not N re-union
+                slices of the same checkpoint — N slices execute as
+                N x its partitions in one job)."""
                 import warnings
                 try:
-                    return SubmissionValidator(
-                        sess, **_kwargs_for(sub)).validate()
-                except Exception as exc:
-                    failures[sub] = f"{type(exc).__name__}: " \
-                                    f"{str(exc)[:300]}"
-                    warnings.warn(f"validation FAILED for submission "
-                                  f"{sub}: {failures[sub]}; moving on")
-                    return None
-
-            # Group completing submissions by order-sensitive header
-            # signature (probe driver-side, no Spark): a group of
-            # batch_threshold+ compiles through ONE plan with ONE
-            # multi-file scan per sheet — the CLI --batched machinery.
-            # A probe-refused header (None) keys on its path, which
-            # never merges distinct schemas.
-            groups: dict = {}
-            for sub in complete_now:
-                key = tuple(
-                    (name, tuple(cols) if (cols := hdr_cache[pth])
-                     is not None else ("?", pth))
-                    for name, pth in sorted(have[sub].items())
-                    if name not in SKIP_VALIDATION)
-                groups.setdefault(key, []).append(sub)
-            # a db_merged_tables side input is per-submission by nature;
-            # validate_batched rejects it — don't even form groups
-            if (bind_kwargs or {}).get("db_merged_tables"):
-                batched, singles = [], list(complete_now)
-            else:
-                batched = [m for m in groups.values()
-                           if len(m) >= max(2, batch_threshold)]
-                singles = [s for m in groups.values()
-                           if len(m) < max(2, batch_threshold) for s in m]
-
-            group_frames: list = []      # one combined frame per group
-            grouped_sids: set = set()
-            for members in batched:
-                from nci_seronet_proc_data_validator_spark.orchestrate \
-                    import SUB_COL, validate_batched_results
-                from nci_seronet_proc_data_validator_spark.sources.readers \
-                    import read_sheet_csv_tagged
-                try:
-                    subs_kw = {s: _kwargs_for(s, frames=False)
-                               for s in members}
+                    subs_kw = {s: _kwargs_for(s) for s in members}
                     names = [n for n in subs_kw[members[0]]["sheets"]
                              if n not in SKIP_VALIDATION]
                     # probed header -> explicit schema: the group key
@@ -671,49 +619,66 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                             columns=hdr_cache[have[members[0]][n]])
                         for n in names}
                     combined: list = []
-                    results.update(validate_batched_results(
+                    results_ = validate_batched_results(
                         sess, subs_kw, pretagged=pretagged,
-                        combined_out=combined))
-                    # sink the group's WHOLE batch frame, not N re-union
-                    # slices of the same checkpoint (N slices execute
-                    # as N x its partitions in one job — the dominant
-                    # burst cost once compiles batch)
-                    group_frames.extend(combined)
-                    grouped_sids.update(members)
+                        combined_out=combined)
+                    return results_, combined
                 except Exception as exc:
-                    # an eligibility rejection (ValueError: Column-valued
-                    # custom check, mixed bind config) or any one
-                    # member's poison (unrenderable column name, ...)
-                    # must NOT wedge the stream: the batch would fail,
-                    # replay the same grouping, and fail identically
-                    # forever. Fall back to per-submission compiles —
-                    # identical findings semantics, and the singles path
-                    # then isolates WHICH member is at fault.
-                    import warnings
-                    warnings.warn(
-                        f"batched completion-group compile rejected "
-                        f"({exc}); falling back to per-submission "
-                        f"compiles for {members}")
-                    singles.extend(members)
-            # Singletons/sub-threshold groups are independent compiles
-            # (memoized binds make repeated schemas cheap); overlap
-            # their driver builds + small reconciliation actions on a
-            # bounded pool — validate_concurrent's model, width 4 (the
-            # measured GIL ceiling for plan builds, BENCH_NOTES r11)
-            if len(singles) == 1:
-                compiled = [_compile_one(singles[0])]
-            elif singles:
-                with ThreadPoolExecutor(
-                        max_workers=min(4, len(singles)),
-                        thread_name_prefix="watch-complete") as pool:
-                    compiled = list(pool.map(_compile_one, singles))
+                    # Per-submission error isolation — the reference's
+                    # "Moving onto Next Submitted File" loop
+                    # (nci-seronet-data-validator.py:70,109-111). A
+                    # raise here would fail the micro-batch, which
+                    # replays the same grouping and fails identically
+                    # forever — a permanent wedge blocking every LATER
+                    # submission. A group retries its members as groups
+                    # of one, which isolates WHICH member is at fault;
+                    # a failed group of one is recorded (durably, as
+                    # one finding row below) and the drain moves on.
+                    if len(members) > 1:
+                        warnings.warn(
+                            f"completion-group compile failed ({exc}); "
+                            f"falling back to per-submission groups of "
+                            f"one for {members}")
+                        results_, frames = {}, []
+                        for s in members:
+                            r, f = _compile([s])
+                            results_.update(r)
+                            frames.extend(f)
+                        return results_, frames
+                    sub = members[0]
+                    failures[sub] = f"{type(exc).__name__}: " \
+                                    f"{str(exc)[:300]}"
+                    warnings.warn(f"validation FAILED for submission "
+                                  f"{sub}: {failures[sub]}; moving on")
+                    return {}, []
+
+            # Group completing submissions by order-sensitive header
+            # signature (probe driver-side, no Spark). A probe-refused
+            # header (None) keys on its path, which never merges
+            # distinct schemas. Distinct groups overlap their driver
+            # builds on a bounded pool — validate_concurrent's model,
+            # width 4 (the measured GIL ceiling for plan builds,
+            # BENCH_NOTES r11).
+            groups: dict = {}
+            for sub in complete_now:
+                key = tuple(
+                    (name, tuple(cols) if (cols := hdr_cache[pth])
+                     is not None else ("?", pth))
+                    for name, pth in sorted(have[sub].items())
+                    if name not in SKIP_VALIDATION)
+                groups.setdefault(key, []).append(sub)
+            members_list = list(groups.values())
+            if len(members_list) == 1:
+                compiled = [_compile(members_list[0])]
             else:
-                compiled = []
-            results.update((s, r) for s, r in zip(singles, compiled)
-                           if r is not None)
-            parts = group_frames + [
-                r.findings.withColumn("__submission_id", F.lit(sub))
-                for sub, r in results.items() if sub not in grouped_sids]
+                with ThreadPoolExecutor(
+                        max_workers=min(4, len(members_list)),
+                        thread_name_prefix="watch-complete") as pool:
+                    compiled = list(pool.map(_compile, members_list))
+            parts: list = []
+            for res, frames in compiled:
+                results.update(res)
+                parts.extend(frames)
             if failures:
                 # durable failure record: one row per failed submission
                 # in the SAME findings sink (the reference's jobs-table
@@ -743,14 +708,6 @@ def validate_stream_submissions(spark: SparkSession, root_dir: str,
                 failed_cb(dict(failures), epoch_id)
         if status_cb is not None:
             status_cb(findings, epoch_id)
-        # a RESIDENT watcher validates submissions for the query's
-        # lifetime — release each result's findings cache after the
-        # LAST consumer (status_cb included: its actions must hit the
-        # cache, not a recompute whose dedup could pick a different
-        # duplicate representative than the sinked rows), or pinned
-        # storage blocks accumulate forever
-        for r in results.values():
-            r.release()
 
     return (raw.writeStream
             .foreachBatch(process)

@@ -5,46 +5,20 @@ Mirrors ``lambda_handler``'s per-submission flow
 check → Merged_Tables → per-sheet enrichment + rules → cross-sheet
 integrity → count reconciliation → summary. The reference mutates a
 ``Submission_Object`` sheet-by-sheet, cell-by-cell; here every step is a
-DataFrame transformation and the result is ONE findings DataFrame built
-lazily — nothing executes until a sink action runs, so Catalyst sees the
-whole plan.
+DataFrame transformation compiled by ONE submission compiler
+(``orchestrate.validate_batched_results``) — a single submission is a
+batch of one, so the per-submission and batched paths cannot drift.
 """
 
 from __future__ import annotations
 
 import datetime
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nci_seronet_proc_data_validator_spark.errors import (
-    COLUMN_FINDING_SCHEMA,
-    ROW_COUNT_MISMATCH,
-    dedup_findings,
-    empty_findings,
-    findings_summary,
-    local_rows_df,
-    union_findings,
-)
-from nci_seronet_proc_data_validator_spark.operators.joins import (
-    icd10_flag_join,
-    merge_tables,
-    merged_table,
-)
-from nci_seronet_proc_data_validator_spark.operators.typing import with_typed_shadows
-from nci_seronet_proc_data_validator_spark.plans.rulebook import (
-    BoundSheet,
-    bind_sheet_rules_cached,
-    _icd10_flag,
-)
-from nci_seronet_proc_data_validator_spark.plans.rules import (
-    compile_sheet_findings,
-    dup_id_findings,
-    dup_id_findings_sql,
-    sheet_findings_sql_cached,
-)
-from nci_seronet_proc_data_validator_spark.sources.readers import cleanup_sheet
+from nci_seronet_proc_data_validator_spark.errors import ROW_COUNT_MISMATCH
 
 SKIP_VALIDATION = ("submission.csv", "shipping_manifest.csv")
 
@@ -168,7 +142,8 @@ def column_compare_rows(name: str, have: list[str],
                         expected: list[str]) -> list[tuple]:
     """P10 ``check_col_names`` set algebra (File_Submission_Object.py:
     55-72): actual header vs expected catalog, both directions. Shared by
-    ``_column_findings`` and the parity arm so one code path is tested."""
+    the submission compiler's P10 tail and the parity arm so one code
+    path is tested."""
     rows = []
     for c in [c for c in have if c not in expected]:
         rows.append(("Error", name, c,
@@ -197,22 +172,12 @@ A4_ROW_SCHEMA = ("Message_Type string, CSV_Sheet_Name string, "
 def a4_mismatch_tuple(declared, n: int, label: str,
                       fname: str) -> tuple | None:
     """The A4 count-mismatch finding as a driver tuple in
-    ``A4_ROW_SCHEMA`` order (None when counts agree) — shared by the
-    serial reconciliation and the batched tail so the message/schema
-    can never drift between paths."""
+    ``A4_ROW_SCHEMA`` order (None when counts agree)."""
     if int(declared) == n:
         return None
     msg = f"After validation only {n} {label} IDS are valid"
     return ("Error", "submission.csv", ROW_COUNT_MISMATCH,
             fname, str(declared), msg)
-
-
-def a4_mismatch_row(spark: SparkSession, declared, n: int, label: str,
-                    fname: str) -> DataFrame | None:
-    tup = a4_mismatch_tuple(declared, n, label, fname)
-    if tup is None:
-        return None
-    return local_rows_df(spark, [tup], A4_ROW_SCHEMA)
 
 
 class ValidationResult:
@@ -229,12 +194,6 @@ class ValidationResult:
       96-submission burst the union-of-96-local-frames collect was a
       96-task Python-worker wave plus a 96-leg analysis for rows the
       driver already held (r14).
-    - ``cached``: the cache() node inside ``findings`` (the deduped row
-      findings) — long-lived consumers (a resident watcher validating
-      thousands of submissions) must ``release()`` after their final
-      action on ``findings``, or pinned storage blocks accumulate for
-      the session's lifetime. Batch CLIs may ignore it (the process
-      exits).
 
     Each frame may be passed either directly or as a zero-arg THUNK
     (``findings_thunk=...``) built on first attribute access: plan
@@ -250,7 +209,6 @@ class ValidationResult:
                  column_findings: "DataFrame | None" = None,
                  summary: "DataFrame | None" = None, *,
                  column_finding_rows: "list | None" = None,
-                 cached: "DataFrame | None" = None,
                  findings_thunk=None, column_findings_thunk=None,
                  summary_thunk=None):
         self._findings = findings
@@ -260,7 +218,6 @@ class ValidationResult:
         self._column_findings_thunk = column_findings_thunk
         self._summary_thunk = summary_thunk
         self.column_finding_rows = column_finding_rows
-        self.cached = cached
 
     @property
     def findings(self) -> DataFrame:
@@ -284,12 +241,6 @@ class ValidationResult:
     def error_count(self) -> int:
         return self.findings.filter(F.col("Message_Type") == "Error").count()
 
-    def release(self) -> None:
-        """Unpersist the internal findings cache (no-op when absent).
-        After this, further actions on `findings` recompute the plan."""
-        if self.cached is not None:
-            self.cached.unpersist()
-
 
 @dataclass
 class SubmissionValidator:
@@ -310,244 +261,16 @@ class SubmissionValidator:
     fix_reference_bugs: bool = True
 
     def validate(self) -> ValidationResult:
-        clean = {name: cleanup_sheet(df)
-                 for name, df in self.sheets.items()
-                 if name not in SKIP_VALIDATION}
-
-        merged = dict(self.db_merged_tables)
-        for name, df in clean.items():
-            mt = merged_table(df, name)
-            if mt is not None:
-                merged[name] = mt
-
-        parts: list[DataFrame] = []
-        part_sheets: list[tuple[str, DataFrame, BoundSheet]] = []
-        bio_sheets: list[tuple[str, DataFrame, BoundSheet]] = []
-
-        # Findings legs accumulate as SQL text over per-sheet temp views
-        # and submit as ONE spark.sql: each compile_sheet_findings +
-        # unionByName leg costs a JVM analysis of its whole subtree —
-        # the dominant driver-latency term of a multi-sheet validate()
-        # (same restructure as q_rulebook_full, r8; global dedup below
-        # is unchanged, so findings are identical).
-        import uuid as _uuid
-        run_id = _uuid.uuid4().hex[:8]
-        sql_legs: list[str] = []
-        view_names: list[str] = []
-
-        for name, df in clean.items():
-            original_cols = [c for c in df.columns if c != "row_index"]
-            enriched, drop_list = merge_tables(name, df, merged)
-            enriched = with_typed_shadows(enriched)
-            # Memoized: submissions 2..N sharing this sheet schema skip
-            # both the rule binding and the 459-check SQL render below —
-            # the serial driver-build fraction that Amdahl-bounds
-            # concurrent orchestration (BENCH_NOTES r10/r11).
-            bound = bind_sheet_rules_cached(
-                name, original_cols, self.cbc_id,
-                drop_list=drop_list, today=self.today,
-                fix_reference_bugs=self.fix_reference_bugs)
-            # Dependency columns referenced by rules but absent (e.g. the
-            # SARS column when prior_clinical_test wasn't submitted and no
-            # DB fallback exists) — default to '' so predicates resolve.
-            enriched = self._ensure_columns(enriched, bound)
-            for c in bound.icd10_columns:
-                if self.icd10_codes is not None:
-                    enriched = icd10_flag_join(enriched, c, self.icd10_codes,
-                                               _icd10_flag(c))
-                else:
-                    enriched = enriched.withColumn(_icd10_flag(c), F.lit(False))
-            texty = all(isinstance(ce.violation, str)
-                        and isinstance(ce.message, str)
-                        for cr in bound.column_rules for ce in cr.checks)
-            if texty:
-                view = f"__submission_{run_id}_{len(view_names)}"
-                enriched.createOrReplaceTempView(view)
-                view_names.append(view)
-                sql_legs.extend(sheet_findings_sql_cached(view, name,
-                                                          bound))
-            else:   # Column-valued checks force the classic compile path
-                parts.append(compile_sheet_findings(enriched, name,
-                                                    bound.column_rules))
-            if bound.dup_id_columns and texty:
-                # SQL-text twin over a view of the CLEAN sheet (not the
-                # enriched one: enrichment joins must not influence dup
-                # multiplicity) — joins the one-statement assembly below
-                # instead of paying a per-leg DataFrame analysis
-                # (cProfile r11: ~0.26 s of the submission build).
-                dview = f"__submission_{run_id}_d{len(view_names)}"
-                df.createOrReplaceTempView(dview)
-                view_names.append(dview)
-                sql_legs.extend(dup_id_findings_sql(dview, name, c)
-                                for c in bound.dup_id_columns)
-            else:
-                for c in bound.dup_id_columns:
-                    parts.append(dup_id_findings(df, name, c))
-            if bound.registers_participants:
-                part_sheets.append((name, df, bound))
-            if bound.registers_biospecimens:
-                bio_sheets.append((name, df, bound))
-
-        if sql_legs:
-            parts.insert(0, self.spark.sql(" UNION ALL ".join(sql_legs)))
-        for view in view_names:    # resolved eagerly by spark.sql above
-            self.spark.catalog.dropTempView(view)
-
-        parts.extend(self._cross_sheet_findings(clean, merged))
-
-        findings = union_findings(parts) or empty_findings(self.spark)
-        findings = cached = dedup_findings(findings).cache()
-
-        parts2 = [findings]
-        parts2.extend(self._count_reconciliation(findings, part_sheets,
-                                                 bio_sheets))
-        findings = union_findings(parts2)
-
-        col_rows = self._column_finding_rows(clean)
-        return ValidationResult(findings=findings,
-                                column_findings=local_rows_df(
-                                    self.spark, col_rows,
-                                    COLUMN_FINDING_SCHEMA),
-                                summary=findings_summary(findings),
-                                column_finding_rows=col_rows,
-                                cached=cached)
-
-    # ------------------------------------------------------------------
-    def _ensure_columns(self, df: DataFrame, bound: BoundSheet) -> DataFrame:
-        # Same-sheet dependency columns always exist; these arrive via the
-        # enrichment joins and are absent when the parent sheet was not
-        # submitted and no DB fallback exists (the reference always has the
-        # MySQL fallback). Sentinels: '' disables dependency-scoped rules;
-        # NULL makes assay resolution (C9) flag everything as unresolved —
-        # "not found in database or submitted file" is then literally true.
-        defaults = {
-            "SARS_CoV_2_PCR_Test_Result": F.lit(""),
-            "Biospecimen_Type": F.lit(""),
-            "Assay_Name": F.lit(None).cast("string"),
-            "Assay_Antigen_Source": F.lit(None).cast("string"),
-        }
-        missing = {c: v for c, v in defaults.items() if c not in df.columns}
-        return df.withColumns(missing) if missing else df
-
-    def _cross_sheet_findings(self, clean: dict[str, DataFrame],
-                              merged: dict[str, DataFrame]) -> list[DataFrame]:
-        """Cross-sheet ID reconciliation via the generated-SQL twins of
-        outer_join_spine + the presence decoders (r11): the Column-object
-        composition cost ~0.35 s of py4j round-trips per submission on
-        the serial driver-build path; one rendered statement analyzes
-        once. Equivalence (incl. duplicate-key multiplicity and missing
-        sources) pinned by tests/test_cross_sheet.py."""
-        from nci_seronet_proc_data_validator_spark.operators.joins import (
-            biospecimen_cross_sql,
-            participant_cross_sql,
+        """Validate this submission as a batch of one: the one submission
+        compiler, :func:`..orchestrate.validate_batched_results`, with
+        this validator's fields as the submission's keyword arguments."""
+        from nci_seronet_proc_data_validator_spark.orchestrate import (
+            validate_batched_results,
         )
-        import uuid as _uuid
-        run = _uuid.uuid4().hex[:8]
-        views: list[tuple[bool, str]] = []
-
-        def reg(df: DataFrame, tag: str) -> str:
-            v = f"__cross_{run}_{tag}"
-            # A temp view registers in the DATAFRAME's session, but the
-            # SQL below runs on self.spark — fine until a caller-provided
-            # side input (a db_merged_tables fallback) was created on a
-            # DIFFERENT session. The real case: foreachBatch hands the
-            # validator the streaming CLONE session while the fallback
-            # frame lives on the original — the view lands in a catalog
-            # self.spark.sql never consults (TABLE_OR_VIEW_NOT_FOUND).
-            # Global temp views are the public cross-session mechanism;
-            # use one exactly when the sessions differ.
-            try:
-                same = df.sparkSession._jsparkSession.equals(
-                    self.spark._jsparkSession)
-            except AttributeError:   # e.g. connect-mode wrappers
-                same = df.sparkSession is self.spark
-            if same:
-                df.createOrReplaceTempView(v)
-                views.append((False, v))
-                return v
-            df.createOrReplaceGlobalTempView(v)
-            views.append((True, v))
-            return f"global_temp.{v}"
-
-        out = []
-        part_sources = {s: merged.get(s) for s in
-                        ("prior_clinical_test.csv", "demographic.csv",
-                         "biospecimen.csv", "confirmatory_clinical_test.csv")}
-        if sum(v is not None for v in part_sources.values()) >= 2:
-            pviews = {n: (reg(src, f"p{i}") if src is not None else None)
-                      for i, (n, src) in enumerate(part_sources.items())}
-            submitted = self._submitted_ids(clean, part_sources,
-                                            "Research_Participant_ID")
-            sv = reg(submitted, "psub") if submitted is not None else None
-            out.append(self.spark.sql(
-                participant_cross_sql(pviews, self.cbc_id, sv)))
-        bio_sources = {s: merged.get(s) for s in
-                       ("biospecimen.csv", "aliquot.csv", "equipment.csv",
-                        "reagent.csv", "consumable.csv")}
-        if sum(v is not None for v in bio_sources.values()) >= 2:
-            bviews = {n: (reg(src, f"b{i}") if src is not None else None)
-                      for i, (n, src) in enumerate(bio_sources.items())}
-            type_sources = {n for n, src in bio_sources.items()
-                            if src is not None
-                            and "Biospecimen_Type" in src.columns}
-            submitted = self._submitted_ids(clean, bio_sources,
-                                            "Biospecimen_ID")
-            sv = reg(submitted, "bsub") if submitted is not None else None
-            out.append(self.spark.sql(biospecimen_cross_sql(
-                bviews, self.cbc_id, sv, type_sources=type_sources)))
-        for is_global, v in views:      # resolved eagerly by spark.sql above
-            if is_global:
-                self.spark.catalog.dropGlobalTempView(v)
-            else:
-                self.spark.catalog.dropTempView(v)
-        return out
-
-    def _submitted_ids(self, clean, sources, key) -> DataFrame | None:
-        """Union of IDs present in SUBMITTED sheets (get_submitted_ids
-        intent, File_Submission_Object.py:356-367 — reference bug §2.9.2:
-        its merge result was discarded; we apply the restriction)."""
-        if not self.fix_reference_bugs:
-            return None
-        parts = [df.select(key) for name, df in clean.items()
-                 if name in sources and key in df.columns]
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.distinct()
-
-    def _count_reconciliation(self, findings: DataFrame, part_sheets,
-                              bio_sheets) -> list[DataFrame]:
-        """A4 ``get_passing_part_ids`` (File_Submission_Object.py:397-415):
-        distinct submitted IDs that produced no row-level finding on their
-        ID column, compared to the declared counts from submission.csv.
-
-        The comparison needs the actual count (an action) — it is driver
-        logic in the reference too (reference bug §2.9.6: the emitted
-        Column_Value reads an attribute that was never set; we emit the
-        declared count, the evident intent).
-        """
-        out = []
-        for declared, sheets, (col_name, label, fname) in (
-                (self.declared_participants, part_sheets, A4_FAMILIES[0]),
-                (self.declared_biospecimens, bio_sheets, A4_FAMILIES[1])):
-            if declared is None or not sheets:
-                continue
-            passing = None
-            for name, df, _ in sheets:
-                errs = (findings.filter(
-                    (F.col("CSV_Sheet_Name") == name)
-                    & (F.col("Column_Name") == col_name)
-                    & (F.col("Row_Index") >= 0))
-                    .select(F.col("Column_Value").alias(col_name)))
-                ok = df.select(col_name).join(errs, col_name, "left_anti")
-                passing = ok if passing is None else passing.unionByName(ok)
-            n = passing.distinct().count()
-            row = a4_mismatch_row(self.spark, declared, n, label, fname)
-            if row is not None:
-                out.append(row)
-        return out
+        kwargs = {f.name: getattr(self, f.name) for f in fields(self)
+                  if f.name != "spark"}
+        return validate_batched_results(
+            self.spark, {"submission": kwargs})["submission"]
 
     def _column_finding_rows(self, clean: dict) -> list:
         """P10 ``check_col_names`` (File_Submission_Object.py:55-72):
@@ -565,7 +288,3 @@ class SubmissionValidator:
                 have = [c for c in cols if c != "row_index"]
                 rows.extend(column_compare_rows(name, have, expected))
         return rows
-
-    def _column_findings(self, clean: dict) -> DataFrame:
-        return local_rows_df(self.spark, self._column_finding_rows(clean),
-                             COLUMN_FINDING_SCHEMA)

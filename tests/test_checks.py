@@ -245,3 +245,35 @@ def test_fix_reference_bugs_flag_surfaces(spark):
     assert cleanup_sheet(df).count() == 2
     kept = cleanup_sheet(df, fix_reference_bugs=False)
     assert kept.count() == 3   # the ',,' line survives, as in the reference
+
+
+def test_validator_keeps_blank_rows_under_reference_bugs(spark, tmp_path):
+    """SubmissionValidator(fix_reference_bugs=False) must keep an
+    all-blank ',,' ingest row and report the reference's "Missing
+    Values" findings on it; with the fix the row is dropped and none
+    are reported for it."""
+    from nci_seronet_proc_data_validator_spark.sources.readers import (
+        read_sheet_csv,
+    )
+    from nci_seronet_proc_data_validator_spark.submission import (
+        SubmissionValidator,
+    )
+    p = tmp_path / "demographic.csv"
+    p.write_text("Research_Participant_ID,Age,Race\n"
+                 "14_000001,30,White\n,,\n14_000002,40,White\n")
+    sheets = {"demographic.csv": read_sheet_csv(spark, str(p))}
+
+    def blank_row_msgs(fix: bool) -> dict:
+        res = SubmissionValidator(
+            spark, sheets=sheets, cbc_id="14",
+            today=datetime.date(2026, 1, 1),
+            fix_reference_bugs=fix).validate()
+        return {r["Column_Name"]: r["Error_Message"]
+                for r in res.findings.collect() if r["Row_Index"] == 3}
+
+    kept = blank_row_msgs(False)
+    assert set(kept) >= {"Research_Participant_ID", "Age", "Race"}, kept
+    assert all(m.startswith("Missing Values are not allowed")
+               for c, m in kept.items()
+               if c in ("Research_Participant_ID", "Age", "Race")), kept
+    assert blank_row_msgs(True) == {}

@@ -425,19 +425,48 @@ def test_batched_rejects_column_valued_checks(spark, tmp_path, monkeypatch):
         orch.validate_batched(spark, subs)
 
 
-def test_batched_rejects_db_merged_tables(spark, tmp_path):
-    """r12: serial validate() supports JDBC fallback parents
-    (db_merged_tables); the batched tagged-union enrichment cannot
-    express a per-submission side input, and silently ignoring it would
-    diverge from serial without error — clear ValueError instead."""
+def _prior_fallback(spark, i: int):
+    """A DB fallback prior_clinical_test Merged_Table holding submission
+    i's first participant only (the S5 JDBC read's shape)."""
+    return spark.createDataFrame(
+        [(f"14_00000{i}", "Positive")],
+        "Research_Participant_ID string, SARS_CoV_2_PCR_Test_Result string")
+
+
+def test_batched_db_merged_tables_match_batch_of_one(spark, tmp_path):
+    """Per-submission db_merged_tables fallbacks ride the one compiler:
+    in a batch of two, each member gets exactly the findings of its own
+    batch of one, and those differ from a run without the fallback (so
+    a compiler that ignored the fallback would fail here)."""
+    from nci_seronet_proc_data_validator_spark.orchestrate import (
+        validate_batched_results)
+
+    subs = {}
+    for i in range(2):
+        kw = _load(spark, tmp_path, i)
+        kw["db_merged_tables"] = {
+            "prior_clinical_test.csv": _prior_fallback(spark, i)}
+        subs[f"sub{i}"] = kw
+    both = validate_batched_results(spark, subs)
+    for sid, kw in subs.items():
+        one = _finding_set(validate_batched_results(
+            spark, {sid: kw})[sid].findings)
+        plain = {k: v for k, v in kw.items() if k != "db_merged_tables"}
+        assert one != _finding_set(
+            SubmissionValidator(spark, **plain).validate().findings), sid
+        assert _finding_set(both[sid].findings) == one, sid
+
+
+def test_batched_rejects_mismatched_db_merged_tables(spark, tmp_path):
+    """Fallback parents feed the batch-wide enrichment and cross-sheet
+    gates, so every member must name the same fallback sheet set — the
+    same rule as the sheet-name set — or the batch is refused."""
     from nci_seronet_proc_data_validator_spark.orchestrate import (
         validate_batched)
 
     sub = _load(spark, tmp_path, 0)
-    fallback = spark.createDataFrame(
-        [("14_000099", "Negative")],
-        "Research_Participant_ID string, SARS_CoV_2_PCR_Test_Result string")
-    bad = {**sub, "db_merged_tables": {"prior_clinical_test.csv": fallback}}
+    bad = {**sub, "db_merged_tables": {
+        "prior_clinical_test.csv": _prior_fallback(spark, 0)}}
     with pytest.raises(ValueError, match="db_merged_tables"):
         validate_batched(spark, {"a": bad, "b": sub})
 
@@ -495,7 +524,6 @@ def test_batched_results_free_data_scale_caches(spark, tmp_path):
     results = validate_batched_results(spark, subs)
     for sid, r in results.items():
         assert r.findings.count() > 0, sid
-        r.release()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: SLF001
 
 

@@ -405,9 +405,9 @@ def test_clean_submission_reports_completed(spark, tmp_path, monkeypatch,
 def test_same_schema_completions_batch_through_one_plan(spark, tmp_path,
                                                         monkeypatch):
     """r13: three same-schema submissions + one different-schema one all
-    completing in ONE epoch — the same-schema group must route through
-    validate_batched_results (ONE compiled plan, pretagged multi-file
-    scans) and the odd one through the per-submission path, with every
+    completing in ONE epoch — the same-schema group compiles through ONE
+    validate_batched_results call (ONE plan, pretagged multi-file scans)
+    and the odd one as a group of one through the same call, with every
     submission's findings still equal to its own batch compile."""
     import nci_seronet_proc_data_validator_spark.orchestrate as orch
 
@@ -443,7 +443,8 @@ def test_same_schema_completions_batch_through_one_plan(spark, tmp_path,
         bind_kwargs={"today": TODAY})
     q.awaitTermination(600)
 
-    assert calls == [(["s0", "s1", "s2"], True)]    # one batched group
+    # one call per schema group; groups compile concurrently
+    assert sorted(calls) == [(["odd"], True), (["s0", "s1", "s2"], True)]
     got = spark.read.parquet(os.path.join(out, "findings"))
     for name, p in paths.items():
         mine = got.filter(F.col("__submission_id") == name).drop(
@@ -452,75 +453,70 @@ def test_same_schema_completions_batch_through_one_plan(spark, tmp_path,
         assert _finding_set(mine) == _finding_set(want), name
 
 
-def test_batched_group_rejection_falls_back_not_wedges(spark, tmp_path,
-                                                       monkeypatch):
-    """r13 review: a ValueError from the batched compile (e.g. a
-    Column-valued custom rule, which has no SQL text form) must NOT
-    fail the micro-batch — a failed batch replays the same grouping on
-    restart and fails identically forever, wedging the stream. The
-    group must fall back to per-submission serial compiles (which
-    evaluate such rules via the DataFrame path) with findings still
-    equal to each submission's own batch compile."""
+def test_batched_group_rejection_falls_back_not_wedges(spark, tmp_path):
+    """r13 review: a group compile that raises must NOT fail the
+    micro-batch — a failed batch replays the same grouping on restart
+    and fails identically forever, wedging the stream. Here one member
+    of a same-schema group declares a non-numeric participant count, so
+    the group's A4 tail raises. The group retries its members as groups
+    of one: the healthy member's findings equal its own batch compile,
+    and only the poisoned member gets the durable failure row."""
     import warnings
-
-    from nci_seronet_proc_data_validator_spark.functions.checks import (
-        CheckExpr)
-    from nci_seronet_proc_data_validator_spark.plans import rulebook as rb
-    from nci_seronet_proc_data_validator_spark.plans.rules import ColumnRules
-
-    real_bind = rb.bind_sheet_rules_cached
-
-    def bind_with_column_rule(sheet, columns, cbc_id, **kw):
-        import copy
-        bound = copy.copy(real_bind(sheet, columns, cbc_id, **kw))
-        if sheet == "demographic.csv":
-            bound.column_rules = [*bound.column_rules, ColumnRules(
-                "Age", [CheckExpr(F.col("Age") == "13", "unlucky age")])]
-        return bound
-
-    monkeypatch.setattr(
-        "nci_seronet_proc_data_validator_spark.plans.rulebook."
-        "bind_sheet_rules_cached", bind_with_column_rule)
 
     root = tmp_path / "landing"
     paths = {f"s{i}": _write_submission(root, f"s{i}", "LabX", i)
              for i in range(2)}               # same schema -> one group
+    with open(paths["s1"]["submission.csv"], "w") as f:
+        # the participant count is data row 2 (iloc[1][1]); int("nine")
+        # raises in the A4 tail
+        f.write("key,LabX\np,9\nb,nine\n")
 
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    failed = {}
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         q = validate_stream_submissions(
             spark, str(root), cp, DECLARED, out, cbc_map=CBC_MAP,
-            bind_kwargs={"today": TODAY})
+            bind_kwargs={"today": TODAY},
+            failed_cb=lambda f, _e: failed.update(f))
         q.awaitTermination(600)
     assert any("falling back to per-submission" in str(w.message)
                for w in caught), [str(w.message) for w in caught]
+    assert list(failed) == ["s1"], failed
 
     got = spark.read.parquet(os.path.join(out, "findings"))
-    for name, p in paths.items():            # twins under the same patch
-        mine = got.filter(F.col("__submission_id") == name).drop(
-            "__submission_id", "epoch")
-        want = _batch_twin(spark, p).findings
-        assert _finding_set(mine) == _finding_set(want), name
+    mine = got.filter(F.col("__submission_id") == "s0").drop(
+        "__submission_id", "epoch")
+    want = _batch_twin(spark, paths["s0"]).findings
+    assert _finding_set(mine) == _finding_set(want)
+    poisoned = got.filter(F.col("__submission_id") == "s1").collect()
+    assert [(r["CSV_Sheet_Name"], r["Column_Name"]) for r in poisoned] \
+        == [("__submission__", "__validation_failure__")]
+    assert poisoned[0]["Error_Message"].startswith("ValueError")
 
 
-def test_db_merged_tables_routes_around_batching(spark, tmp_path,
-                                                 monkeypatch):
-    """r13 review: bind_kwargs with db_merged_tables (the S5 JDBC
-    fallback, a per-submission side input validate_batched rejects)
-    must route every completion through the per-submission path — the
-    batched group would otherwise raise inside foreachBatch and wedge
-    the stream."""
+def test_db_merged_tables_compile_as_one_group(spark, tmp_path,
+                                               monkeypatch):
+    """bind_kwargs with db_merged_tables (the S5 JDBC fallback, a
+    per-submission side input) compiles a same-schema completion group
+    through ONE validate_batched_results call. The fallback frame lives
+    on the outer session while the compile runs on the micro-batch's
+    clone session, so its views must register across sessions; findings
+    equal each submission's own validate() with the same fallback."""
     import nci_seronet_proc_data_validator_spark.orchestrate as orch
 
-    def boom(*a, **kw):
-        raise AssertionError("batched path must not be reached")
+    calls = []
+    real = orch.validate_batched_results
 
-    monkeypatch.setattr(orch, "validate_batched_results", boom)
+    def spy(spark_, subs, pretagged=None, **kw):
+        calls.append(sorted(subs))
+        return real(spark_, subs, pretagged=pretagged, **kw)
+
+    monkeypatch.setattr(orch, "validate_batched_results", spy)
 
     root = tmp_path / "landing"
     paths = {f"s{i}": _write_submission(root, f"s{i}", "LabX", i)
-             for i in range(2)}               # same schema -> groupable
+             for i in range(2)}               # same schema -> one group
     fallback = spark.createDataFrame(
         [("14_999999", "Negative")],
         "Research_Participant_ID string, "
@@ -532,6 +528,7 @@ def test_db_merged_tables_routes_around_batching(spark, tmp_path,
         bind_kwargs={"today": TODAY, "db_merged_tables": {
             "prior_clinical_test.csv": fallback}})
     q.awaitTermination(600)
+    assert calls == [["s0", "s1"]]
 
     got = spark.read.parquet(os.path.join(out, "findings"))
     for name, p in paths.items():

@@ -6,11 +6,7 @@ drain, so all N complete in ONE epoch, then times a cold-JVM
 batched completion groups exist for (BENCH_NOTES r13: 24 submissions
 189.5 s per-submission vs 58.6 s batched).
 
-    python tools/bench_watch_burst.py [N] [--threshold K] [--runs R]
-
---threshold passes through to `run_watcher.py --batch-threshold`
-(a very large value disables batching, giving the per-submission
-baseline).
+    python tools/bench_watch_burst.py [N] [--runs R]
 """
 
 from __future__ import annotations
@@ -41,7 +37,7 @@ def stage(root: str, n: int) -> None:
             f.write("key,LabX\np,9\nb,9\n")
 
 
-def drain(root: str, threshold: int | None) -> float:
+def drain(root: str) -> float:
     out = tempfile.mkdtemp(prefix="burst_out_")
     cp = tempfile.mkdtemp(prefix="burst_cp_")
     cmd = [sys.executable, os.path.join(REPO, "tools", "run_watcher.py"),
@@ -49,8 +45,6 @@ def drain(root: str, threshold: int | None) -> float:
            "--sheets", "submission.csv,demographic.csv,biospecimen.csv",
            "--cbc", "LabX=14", "--out", out, "--checkpoint", cp,
            "--timeout", "900"]
-    if threshold is not None:
-        cmd += ["--batch-threshold", str(threshold)]
     t0 = time.monotonic()
     try:
         r = subprocess.run(cmd, capture_output=True, text=True,
@@ -70,7 +64,6 @@ def drain(root: str, threshold: int | None) -> float:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("n", nargs="?", type=int, default=24)
-    ap.add_argument("--threshold", type=int, default=None)
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
@@ -80,9 +73,8 @@ def main() -> int:
         walls = []
         for _ in range(args.runs):
             # fresh checkpoint per run = a full cold re-drain
-            walls.append(drain(root, args.threshold))
-        print(f"best-of-{args.runs}: {min(walls):.1f} s "
-              f"(n={args.n}, threshold={args.threshold or 'default'})")
+            walls.append(drain(root))
+        print(f"best-of-{args.runs}: {min(walls):.1f} s (n={args.n})")
         return 0
     finally:
         shutil.rmtree(root, ignore_errors=True)

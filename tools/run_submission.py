@@ -16,10 +16,10 @@ parquet land under OUT_DIR (per-submission subdirs in multi mode).
 
 ``--batched`` groups the submissions by schema signature (sheet-name
 set + per-sheet column sets — CBC ids MAY differ, batched v2) and
-compiles each same-shape group of >=2 through ONE plan
-(``orchestrate.validate_batched_results``); singletons fall back to
-per-submission validate(). Findings per submission are identical to
-serial/concurrent mode — batched is the driver-bound regime's shape
+compiles each same-shape group, a group of one included, through ONE
+plan (``orchestrate.validate_batched_results``). Findings per
+submission are identical to serial/concurrent mode — batched is the
+driver-bound regime's shape
 (thousands of tiny submissions, or a driver remote from the cluster):
 its build cost is O(distinct schemas), not O(N submissions).
 """
@@ -122,22 +122,25 @@ def _report(result, sheets, meta, sub_dir: str, out: str | None) -> bool:
 def _validate_batched_groups(spark, subs: dict) -> dict:
     """--batched mode: group submissions by schema signature (sheet-name
     set + per-sheet column sets + today/flags — CBC ids may differ,
-    batched v2), compile each group of >=2 through ONE plan
-    (``validate_batched_results``), fall back to serial validate() for
-    singleton schemas. Per-GROUP error isolation: a malformed submission
-    fails its group's outcomes, the other groups still validate.
+    batched v2), compile each group, a group of one included, through
+    ONE plan (``validate_batched_results``). Per-GROUP error isolation:
+    a malformed submission fails its group's outcomes, the other groups
+    still validate.
     Returns ``ConcurrentOutcome`` per submission dir (``seconds`` is the
     GROUP wall time for batched members — the plan is shared)."""
     import time
 
     from nci_seronet_proc_data_validator_spark.orchestrate import (
+        SUB_COL,
         ConcurrentOutcome,
         _default_materialize,
         validate_batched_results,
     )
+    from nci_seronet_proc_data_validator_spark.sources.readers import (
+        read_sheet_csv_tagged,
+    )
     from nci_seronet_proc_data_validator_spark.submission import (
         SKIP_VALIDATION,
-        SubmissionValidator,
     )
 
     def sig(kw) -> tuple:
@@ -165,18 +168,6 @@ def _validate_batched_groups(spark, subs: dict) -> dict:
     def _run_group(members: list) -> dict:
         out: dict = {}
         t0 = time.time()
-        if len(members) == 1:
-            d = members[0]
-            try:
-                res = SubmissionValidator(spark, **subs[d]).validate()
-                out[d] = ConcurrentOutcome(
-                    result=res, materialized=_default_materialize(res),
-                    seconds=time.time() - t0)
-            except Exception as exc:  # noqa: BLE001 — isolate per group
-                out[d] = ConcurrentOutcome(result=None, materialized=None,
-                                           seconds=time.time() - t0,
-                                           error=exc)
-            return out
         try:
             # One multi-file scan per sheet name across the group (the
             # 100 TB scan shape: N submissions = N files of one
@@ -184,17 +175,8 @@ def _validate_batched_groups(spark, subs: dict) -> dict:
             # scans unioned. Same-schema membership is guaranteed by
             # the signature grouping above; submission.csv et al stay
             # per-submission (metadata, not validated).
-            from nci_seronet_proc_data_validator_spark.orchestrate import (
-                SUB_COL,
-            )
-            from nci_seronet_proc_data_validator_spark.sources.readers import (
-                read_sheet_csv_tagged,
-            )
-            from nci_seronet_proc_data_validator_spark.submission import (
-                SKIP_VALIDATION as _SKIP,
-            )
             names = [n for n in subs[members[0]]["sheets"]
-                     if n not in _SKIP]
+                     if n not in SKIP_VALIDATION]
             pretagged = {
                 n: read_sheet_csv_tagged(
                     spark, {d: os.path.join(d, n) for d in members},
@@ -333,8 +315,7 @@ def main() -> int:
                          "(FAIR pool per submission)")
     ap.add_argument("--batched", action="store_true",
                     help="compile same-schema submissions through ONE "
-                         "plan (O(distinct schemas) driver build; "
-                         "singleton schemas fall back to serial)")
+                         "plan (O(distinct schemas) driver build)")
     ap.add_argument("--procs", type=int, default=1,
                     help="shard schema groups across N driver PROCESSES "
                          "(each its own JVM, each running --batched over "

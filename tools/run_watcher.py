@@ -75,11 +75,6 @@ def main() -> int:
                          "mode (unknown keys validate under '0')")
     ap.add_argument("--max-files", type=int, default=None,
                     help="maxFilesPerTrigger bound (backlog sizing)")
-    ap.add_argument("--batch-threshold", type=int, default=2,
-                    help="complete mode: completions sharing a schema "
-                         "compile through one batched plan when the "
-                         "group has at least this many members (a very "
-                         "large value forces per-submission compiles)")
     ap.add_argument("--timeout", type=int, default=600,
                     help="seconds to wait for the drain to finish")
     args = ap.parse_args()
@@ -247,7 +242,7 @@ def _run_complete(args) -> int:
         cbc_map=cbc_map, icd10_codes=load_icd10_codes(spark),
         expected_columns=catalog,
         max_files_per_trigger=args.max_files, complete_cb=on_complete,
-        failed_cb=on_failed, batch_threshold=args.batch_threshold)
+        failed_cb=on_failed)
     q.awaitTermination(args.timeout)
     if q.isActive:
         q.stop()
